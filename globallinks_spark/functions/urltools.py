@@ -21,6 +21,7 @@ Semantics cited into the reference:
 
 from __future__ import annotations
 
+import functools
 import re
 
 import pandas as pd
@@ -64,18 +65,30 @@ def etld_plus_one_udf(host: pd.Series) -> pd.Series:
     return host.map(_etld1_one, na_action="ignore")
 
 
-# Literal Columns are py4j objects; building ~9.5k of them costs ~1 s of
-# driver round trips, so build once per process and reuse (unresolved
-# literal expressions are plan-independent and outlive any one query;
-# the py4j gateway lives for the whole process).
-_psl_lit_cache: dict[tuple[str, int], list[Column]] = {}
+# Memoized Column trees. A Column that references only column names and
+# module constants is plan-independent: since Spark 4.0 a Column is a
+# ColumnNode that Spark converts into a Catalyst expression separately
+# for every plan that uses it (fresh expression ids each time, aliases
+# included), and the py4j objects behind it live as long as the
+# gateway, i.e. the whole process. This is why pyproject.toml requires
+# pyspark>=4.0: on 3.5 a Column wraps a finished Catalyst expression
+# whose Alias ids are fixed when it is built, so a cached aliased
+# Column would repeat its ids across plans and within one plan. Building these trees is all py4j round
+# trips (~9.5k PSL literals alone cost ~1 s), so every builder below is
+# memoized per process with ``functools.cache``. Only Columns are cached,
+# never a DataFrame: a DataFrame pins its SparkSession, so a cache of
+# frames would keep stopped sessions alive.
 
 
-def _psl_lits(kind: str, k: int, values: frozenset[str]) -> list[Column]:
-    key = (kind, k)
-    if key not in _psl_lit_cache:
-        _psl_lit_cache[key] = [F.lit(v) for v in sorted(values)]
-    return _psl_lit_cache[key]
+@functools.cache
+def _psl_lits(values: frozenset[str]) -> tuple[Column, ...]:
+    return tuple(F.lit(v) for v in sorted(values))
+
+
+@functools.cache
+def _col(name: str) -> Column:
+    """The column called ``name``, quoted so dots stay part of the name."""
+    return F.col("`" + name.replace("`", "``") + "`")
 
 
 def _etld_expr_parts(
@@ -118,11 +131,9 @@ def _etld_expr_parts(
         if s in big_markers:
             out = big_markers[s]
         elif s in psl.EXACT_BY_LEN:
-            out = suffix(s).isin(*_psl_lits("exact", s, psl.EXACT_BY_LEN[s]))
+            out = suffix(s).isin(*_psl_lits(psl.EXACT_BY_LEN[s]))
         if s - 1 in psl.TAILS_BY_LEN:
-            wild = suffix(s - 1).isin(
-                *_psl_lits("tail", s - 1, psl.TAILS_BY_LEN[s - 1])
-            )
+            wild = suffix(s - 1).isin(*_psl_lits(psl.TAILS_BY_LEN[s - 1]))
             out = wild if out is None else (out | wild)
         if out is None:
             return None
@@ -147,7 +158,7 @@ def _etld_expr_parts(
     for k in sorted(psl.EXCEPTIONS_BY_LEN):
         exc = (
             (n >= k)
-            & suffix(k).isin(*_psl_lits("exc", k, psl.EXCEPTIONS_BY_LEN[k]))
+            & suffix(k).isin(*_psl_lits(psl.EXCEPTIONS_BY_LEN[k]))
         ).cast("int")
         slen = exc * F.lit(k - 1) + (F.lit(1) - exc) * slen
 
@@ -159,39 +170,68 @@ def _etld_expr_parts(
     ).otherwise(out)
 
 
-def _build_etld_expr(host: Column) -> Column:
-    """Pure-expression eTLD+1 (all rule sets inline). See
-    ``etld_plus_one`` for when this is the right shape."""
-    return _etld_expr_parts(host)
-
-
-# Packed suffix-rule strings for the two large rule lengths —
-# session-INDEPENDENT, so a plain module dict is safe. Only the string
-# is cached: an earlier version cached the built DataFrames weak-keyed
-# by session, but a DataFrame strongly references its SparkSession, so
-# the WeakKeyDictionary's values pinned their own keys and stopped
-# sessions stayed alive (round-2 advice). Rebuilding the frame is three
-# gateway calls on a 1-row range — nothing; the cost worth caching is
-# the one ~80 KB join over the 5.8k-rule set below.
-_packed_rules_cache: dict[int, str] = {}
-
-# Built marker-based eTLD+1 trees, keyed by host column name (the tree
-# also references the fixed __psl_m2/__psl_m3 join-marker names).
-_etld_marker_expr_cache: dict[str, Column] = {}
+@functools.cache
+def _suffix_rule_columns(k: int) -> tuple[Column, Column]:
+    """(rule, marker) columns of the length-k broadcast rule table. The
+    rules travel as one ~80 KB string literal split JVM-side: row-by-row
+    createDataFrame of the 5.8k-rule table costs ~2.5 s of py4j
+    serialization (measured); this is one literal, and the split/explode
+    runs in the JVM."""
+    packed = "|".join(sorted(psl.EXACT_BY_LEN[k]))
+    return (
+        F.explode(F.split(F.lit(packed), r"[|]")).alias(f"__psl_s{k}"),
+        F.lit(True).alias(f"__psl_m{k}"),
+    )
 
 
 def _suffix_df(spark, k: int):
-    if k not in _packed_rules_cache:
-        _packed_rules_cache[k] = "|".join(sorted(psl.EXACT_BY_LEN[k]))
-    # One ~80 KB string literal split JVM-side: row-by-row
-    # createDataFrame of the 5.8k-rule table costs ~2.5 s of py4j
-    # serialization (measured); this is one gateway call and the
-    # split/explode runs in the JVM.
-    packed = _packed_rules_cache[k]
+    # built per call: the frame belongs to ``spark`` (see the note on
+    # memoized Column trees above); its Columns are the cached part
+    return spark.range(1).select(*_suffix_rule_columns(k))
+
+
+@functools.cache
+def _registrable_domain_columns(
+    host_col: str, out_col: str, bind: bool
+) -> tuple[Column, tuple[Column, Column], Column]:
+    """(bound label split, the two join-key suffixes, eTLD+1 output) of
+    ``with_registrable_domain``. The trees reference only ``host_col``
+    and the fixed ``__psl_*`` names; the output tree alone costs ~2.5 s
+    of py4j round trips to build (measured)."""
+    from globallinks_spark.functions.binding import bind_once
+
+    host = F.col(host_col)
+    # Bind the label split ONCE behind the optimization barrier: the
+    # suffix probes, the join keys, and the final slice all reference the
+    # bound attribute, so the split appears once in the plan instead of
+    # ~90× (CollapseProject re-inlines deterministic aliases into every
+    # reference; measured the duplication doubles Janino compile time).
+    # Dot-strip before split: parity with psl.etld_plus_one_py on hosts
+    # with leading/trailing dots (see _etld_expr_parts).
+    split = bind_once(
+        F.split(F.regexp_replace(host, r"^\.+|\.+$", ""), r"\.")
+    )
+    labels = F.col("__psl_labels")
+    n = F.size(labels)
+
+    def suffix(k: int) -> Column:
+        start = F.greatest(n - F.lit(k - 1), F.lit(1))
+        return F.concat_ws(".", F.slice(labels, start, k)).alias(f"__psl_s{k}")
+
+    markers = {
+        2: F.col("__psl_m2").isNotNull(),
+        3: F.col("__psl_m3").isNotNull(),
+    }
+    out = _etld_expr_parts(host, big_markers=markers, labels=labels)
+    if bind:
+        # pipelines with many downstream consumers (classification,
+        # dedup keys, filters) must bind the domain behind the
+        # optimization barrier, or CollapseProject/pushdown re-inlines
+        # the whole tree per reference (measured 1,110 split() copies in
+        # the extraction plan without it). Batch-only barrier.
+        out = bind_once(out)
     return (
-        spark.range(1)
-        .select(F.explode(F.split(F.lit(packed), r"[|]")).alias(f"__psl_s{k}"))
-        .withColumn(f"__psl_m{k}", F.lit(True))
+        split.alias("__psl_labels"), (suffix(2), suffix(3)), out.alias(out_col)
     )
 
 
@@ -217,72 +257,31 @@ def with_registrable_domain(
     (wat.go:660-672); parity with the pure-Python spec is pinned by
     tests/test_psl_full.py.
     """
-    host = F.col(host_col)
-    # Bind the label split ONCE behind the optimization barrier: the
-    # suffix probes, the join keys, and the final slice all reference the
-    # bound attribute, so the split appears once in the plan instead of
-    # ~90× (CollapseProject re-inlines deterministic aliases into every
-    # reference; measured the duplication doubles Janino compile time).
-    from globallinks_spark.functions.binding import bind_once
-    # dot-strip before split: parity with psl.etld_plus_one_py on hosts
-    # with leading/trailing dots (see _etld_expr_parts)
-    df = df.withColumn(
-        "__psl_labels",
-        bind_once(
-            F.split(F.regexp_replace(host, r"^\.+|\.+$", ""), r"\.")
-        ),
+    split, suffixes, domain = _registrable_domain_columns(
+        host_col, out_col, bind
     )
-    labels = F.col("__psl_labels")
-    n = F.size(labels)
-
-    def suffix(k: int) -> Column:
-        start = F.greatest(n - F.lit(k - 1), F.lit(1))
-        return F.concat_ws(".", F.slice(labels, start, k))
-
     spark = df.sparkSession
-    joined = df.withColumns(
-        {"__psl_s2": suffix(2), "__psl_s3": suffix(3)}
-    )
-    joined = joined.join(
-        F.broadcast(_suffix_df(spark, 2)), on="__psl_s2", how="left"
-    )
-    joined = joined.join(
-        F.broadcast(_suffix_df(spark, 3)), on="__psl_s3", how="left"
-    )
-    # The output tree references only fixed names (host_col, __psl_m2/3),
-    # so it is plan-independent — cache it: building it costs ~2.5 s of
-    # py4j round trips (measured), paid per *query construction* without
-    # the cache.
-    cache_key = host_col
-    if cache_key not in _etld_marker_expr_cache:
-        markers = {
-            2: F.col("__psl_m2").isNotNull(),
-            3: F.col("__psl_m3").isNotNull(),
-        }
-        _etld_marker_expr_cache[cache_key] = _etld_expr_parts(
-            host, big_markers=markers, labels=F.col("__psl_labels")
-        )
-    out = _etld_marker_expr_cache[cache_key]
-    if bind:
-        # pipelines with many downstream consumers (classification,
-        # dedup keys, filters) must bind the domain behind the
-        # optimization barrier, or CollapseProject/pushdown re-inlines
-        # the whole tree per reference (measured 1,110 split() copies in
-        # the extraction plan without it). Batch-only barrier.
-        from globallinks_spark.functions.binding import bind_once
-        out = bind_once(out)
-    return joined.withColumn(out_col, out).drop(
-        "__psl_labels", "__psl_s2", "__psl_s3", "__psl_m2", "__psl_m3"
+    names = df.columns
+    # the input's columns in place (out_col replaced if present) plus
+    # the domain: the four __psl_* helpers drop out in the same Project
+    keep = [domain if c == out_col else _col(c) for c in names]
+    if out_col not in names:
+        keep.append(domain)
+    return (
+        df.select("*", split)
+        .select("*", *suffixes)
+        .join(F.broadcast(_suffix_df(spark, 2)), on="__psl_s2", how="left")
+        .join(F.broadcast(_suffix_df(spark, 3)), on="__psl_s3", how="left")
+        .select(*keep)
     )
 
 
-# ~9.5k-literal trees cost ~1 s of py4j round trips per build, so built
-# trees are memoized per *simple column name* (a Column is an immutable
-# expression tree; one tree can appear in any number of plans). Complex
-# inputs fall through to a fresh build — hot paths bind the host to an
-# attribute first (operators/extract.py does; see also q_url_parse).
-_etld_expr_cache: dict[str, Column] = {}
 _SIMPLE_COL_RE = re.compile(r"^Column<'([A-Za-z_][A-Za-z0-9_]*)'>$")
+
+
+@functools.cache
+def _etld_expr_for(name: str) -> Column:
+    return _etld_expr_parts(F.col(name))
 
 
 def etld_plus_one(host: Column) -> Column:
@@ -301,13 +300,13 @@ def etld_plus_one(host: Column) -> Column:
     subtree eligible for codegen subexpression elimination (the host is
     split exactly once per row).
     """
+    # built trees are memoized per *simple column name*; complex inputs
+    # fall through to a fresh build — hot paths bind the host to an
+    # attribute first (operators/extract.py does; see also q_url_parse)
     m = _SIMPLE_COL_RE.match(str(host))
     if m is None:
-        return _build_etld_expr(host)
-    name = m.group(1)
-    if name not in _etld_expr_cache:
-        _etld_expr_cache[name] = _build_etld_expr(F.col(name))
-    return _etld_expr_cache[name]
+        return _etld_expr_parts(host)
+    return _etld_expr_for(m.group(1))
 
 
 # ---------------------------------------------------------------------------

@@ -26,6 +26,8 @@ subexpression elimination), so the kernel costs ~2 evaluations per row
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -34,6 +36,14 @@ from globallinks_spark.functions import urltools as U
 
 
 from globallinks_spark.functions.binding import bind_once as _bind
+
+# Every Column tree below references only column names and module
+# constants, so each stage's expressions are built once per process
+# (``functools.cache``) and reused by every plan — building them costs
+# ~6,800 py4j round trips, which would otherwise recur on every
+# extract_links call and every incremental-import micro-batch. Why the
+# reuse is safe: see the note on memoized Column trees in
+# functions/urltools.py.
 
 
 def _robots_flag(metas: Column, token: str) -> Column:
@@ -59,14 +69,11 @@ def _canonicals(head_links: Column) -> Column:
     )
 
 
-def pages_with_url_record(wat_pages: DataFrame) -> DataFrame:
-    """Page kernel: URL parts, eTLD+1, robots flags, dates, then the
-    F1+F7 gates. Shape: cheap raw gate (pushes into the scan) → binding
-    Project (parse/eTLD evaluated once each) → gates on attributes."""
+@functools.cache
+def _page_columns() -> tuple[Column, tuple[Column, ...], Column]:
+    """(raw F1 gate, binding-Project columns, F1+F7 gate) of
+    ``pages_with_url_record``."""
     uri = F.col("target_uri")
-    # F1 raw-string part — before the binding Project so it reaches the scan
-    gated = wat_pages.filter(uri.startswith("http") & ~uri.contains("\n"))
-
     host = U.url_host(uri)
     # Explicit column list, not "*": a broadcast join follows, and join
     # output rows are materialized (UnsafeRow copy) — carrying the raw
@@ -74,7 +81,7 @@ def pages_with_url_record(wat_pages: DataFrame) -> DataFrame:
     # than the join itself. metas collapses to the two robots flags and
     # head_links to the (rare, short) canonicals array right here; only
     # the links array must survive to the explode.
-    bound = gated.select(
+    bound = (
         F.col("title"),
         F.col("links"),
         _canonicals(F.col("head_links")).alias("canonicals"),
@@ -87,25 +94,30 @@ def pages_with_url_record(wat_pages: DataFrame) -> DataFrame:
         F.to_date(F.col("warc_date")).alias("date_imported"),
         F.coalesce(F.col("warc_ip"), F.lit("")).alias("ip"),
     )
+    gate = P.path_ok(F.col("page_path")) & P.record_quality_ok(  # F7
+        F.col("page_domain"), F.col("page_host"), F.col("page_raw_query")
+    )
+    return uri.startswith("http") & ~uri.contains("\n"), bound, gate
+
+
+def pages_with_url_record(wat_pages: DataFrame) -> DataFrame:
+    """Page kernel: URL parts, eTLD+1, robots flags, dates, then the
+    F1+F7 gates. Shape: cheap raw gate (pushes into the scan) → binding
+    Project (parse/eTLD evaluated once each) → gates on attributes."""
+    raw_gate, bound_cols, gate = _page_columns()
+    # F1 raw-string part — before the binding Project so it reaches the scan
+    bound = wat_pages.filter(raw_gate).select(*bound_cols)
     # eTLD+1 over the bound host attribute via the broadcast suffix-table
     # join (full PSL; map-side, no shuffle — see with_registrable_domain);
     # bound so the F7 gate below references an attribute, not the tree
     bound = U.with_registrable_domain(
         bound, "page_host", "page_domain", bind=True
     )
-    return bound.filter(
-        P.path_ok(F.col("page_path"))
-        & P.record_quality_ok(                           # F7
-            F.col("page_domain"), F.col("page_host"), F.col("page_raw_query")
-        )
-    )
+    return bound.filter(gate)
 
 
-def content_quality_gate(pages: DataFrame) -> DataFrame:
-    """F13 (noindex) + F14 (canonical mismatch) — verifyContentQuality,
-    wat.go:736-755. All canonical entries must point at this page. The
-    predicate only references already-computed columns, so pushdown
-    duplicates nothing heavy."""
+@functools.cache
+def _content_gate() -> Column:
     canon_ok = F.forall(
         F.col("canonicals"),
         lambda c: P.canonical_ok(
@@ -113,36 +125,38 @@ def content_quality_gate(pages: DataFrame) -> DataFrame:
             F.col("page_raw_query"), c,
         ),
     )
-    return pages.filter(P.page_indexable(F.col("no_index")) & canon_ok)
+    return P.page_indexable(F.col("no_index")) & canon_ok
 
 
-def explode_links(pages: DataFrame) -> DataFrame:
-    """Explode the nested link array; classify each href exactly as the
-    reference's parseLinks loop does (wat.go:482-556). Emits every anchor
-    with a ``link_class`` column ∈ {internal, external, emitted, skipped}
-    so A3 counters and the link output share one pass.
+def content_quality_gate(pages: DataFrame) -> DataFrame:
+    """F13 (noindex) + F14 (canonical mismatch) — verifyContentQuality,
+    wat.go:736-755. All canonical entries must point at this page. The
+    predicate only references already-computed columns, so pushdown
+    duplicates nothing heavy."""
+    return pages.filter(_content_gate())
 
-    One Project computes the link kernel AND the classification; the
-    anchor gate (F3) runs on the raw exploded struct before any kernel
-    work."""
+
+@functools.cache
+def _link_columns() -> tuple[tuple[Column, ...], Column, tuple[Column, ...]]:
+    """(exploded columns, F3 anchor gate, binding-Project columns) of
+    ``explode_links``."""
     # Explicit column list again: the link-side broadcast join below
     # materializes every exploded row, so only the slim page scalars may
     # ride along (the links array is consumed here; canonicals was only
     # for the page gate).
-    exploded = pages.select(
+    exploded = tuple(F.col(c) for c in (
         "page_host", "page_path", "page_raw_query", "page_scheme",
         "page_domain", "no_index", "page_no_follow", "date_imported",
         "ip", "title",
-        F.explode(F.col("links")).alias("l"),
-    ).filter(P.is_anchor(F.col("l.path")))  # F3 — <a href> only
+    )) + (F.explode(F.col("links")).alias("l"),)
 
     href = F.col("l.url")
     is_absolute = P.is_absolute(href)
     link_host = U.url_host(href)
 
     # binding Project: each URL parse evaluated once per link row
-    bound_parts = exploded.select(
-        "*",
+    bound = (
+        F.col("*"),
         F.coalesce(F.col("l.text"), F.lit("")).alias("link_text"),
         F.greatest(
             F.col("page_no_follow"),
@@ -162,17 +176,14 @@ def explode_links(pages: DataFrame) -> DataFrame:
         _bind(F.when(is_absolute, U.url_raw_query(href)))
         .alias("link_raw_query"),
     )
-    # eTLD+1 over the bound host attribute via the broadcast suffix-table
-    # join (full PSL; map-side, no shuffle), bound behind the barrier so
-    # the dozens of downstream references (classification, dedup keys,
-    # subdomain) see an attribute instead of re-inlining the tree. A null
-    # host (relative href) misses both joins and null-guards through.
-    bound = U.with_registrable_domain(
-        bound_parts, "link_host", "link_domain", bind=True
-    )
+    return exploded, P.is_anchor(F.col("l.path")), bound
 
-    # classification references only attributes — a small tree that stays
-    # in codegen even after the downstream filter inlines it once
+
+@functools.cache
+def _link_class() -> Column:
+    """``link_class`` of ``explode_links``. The classification references
+    only attributes — a small tree that stays in codegen even after the
+    downstream filter inlines it once."""
     parse_ok = (
         F.col("_href_clean")
         & P.path_ok(F.col("link_path"))
@@ -198,7 +209,32 @@ def explode_links(pages: DataFrame) -> DataFrame:
         .when(~P.domain_not_blocked(F.col("link_domain")), F.lit("external"))
         .otherwise(F.lit("emitted"))
     )
-    return bound.select("*", classify.alias("link_class")).drop(
+    return classify.alias("link_class")
+
+
+def explode_links(pages: DataFrame) -> DataFrame:
+    """Explode the nested link array; classify each href exactly as the
+    reference's parseLinks loop does (wat.go:482-556). Emits every anchor
+    with a ``link_class`` column ∈ {internal, external, emitted, skipped}
+    so A3 counters and the link output share one pass.
+
+    One Project computes the link kernel AND the classification; the
+    anchor gate (F3) runs on the raw exploded struct before any kernel
+    work."""
+    exploded, anchor_gate, bound_cols = _link_columns()
+    # F3 — <a href> only, then the binding Project
+    bound_parts = (
+        pages.select(*exploded).filter(anchor_gate).select(*bound_cols)
+    )
+    # eTLD+1 over the bound host attribute via the broadcast suffix-table
+    # join (full PSL; map-side, no shuffle), bound behind the barrier so
+    # the dozens of downstream references (classification, dedup keys,
+    # subdomain) see an attribute instead of re-inlining the tree. A null
+    # host (relative href) misses both joins and null-guards through.
+    bound = U.with_registrable_domain(
+        bound_parts, "link_host", "link_domain", bind=True
+    )
+    return bound.select("*", _link_class()).drop(
         "_is_absolute", "_href_clean"
     )
 
@@ -207,6 +243,21 @@ A2_DEDUP_KEY = (
     "link_domain", "link_sub_domain", "link_path", "link_raw_query",
     "page_host", "page_path", "page_raw_query",
 )
+
+
+@functools.cache
+def _link_row_columns() -> tuple[Column, tuple[Column, ...]]:
+    """(emitted filter, 14 output columns) of ``link_rows``."""
+    return F.col("link_class") == "emitted", (
+        F.col("link_domain"),
+        U.subdomain(F.col("link_host"), F.col("link_domain"))
+        .alias("link_sub_domain"),
+        *map(F.col, ("link_path", "link_raw_query", "link_scheme",
+                     "page_host", "page_path", "page_raw_query",
+                     "page_scheme")),
+        U.scrub_delimiter(F.col("link_text")).alias("link_text"),
+        *map(F.col, ("no_follow", "no_index", "date_imported", "ip")),
+    )
 
 
 def link_rows(
@@ -237,18 +288,8 @@ def link_rows(
 
     The filter and subdomain derivation reference only named columns —
     nothing heavy re-inlines."""
-    out = (
-        classified.filter(F.col("link_class") == "emitted")
-        .select(
-            "link_domain",
-            U.subdomain(F.col("link_host"), F.col("link_domain"))
-            .alias("link_sub_domain"),
-            "link_path", "link_raw_query", "link_scheme",
-            "page_host", "page_path", "page_raw_query", "page_scheme",
-            U.scrub_delimiter(F.col("link_text")).alias("link_text"),
-            "no_follow", "no_index", "date_imported", "ip",
-        )
-    )
+    emitted, columns = _link_row_columns()
+    out = classified.filter(emitted).select(*columns)
     if dedup_partitions:
         out = out.repartition(dedup_partitions, *A2_DEDUP_KEY)
     return out.dropDuplicates(list(A2_DEDUP_KEY))

@@ -1132,7 +1132,7 @@ def q_serving_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         _round2(_dec("o_totalprice")).alias("value"),
     )
     path = _roundtrip_dir("serving")
-    write_serving_table(links, path, buckets=16)
+    write_serving_table(links, path, buckets=16, writers_per_bucket=4)
     return read_serving_table(spark, path, domain="d42.com")
 
 
@@ -1450,10 +1450,15 @@ _QUANTILES_PS = [("p25", 0.25), ("p50", 0.5), ("p75", 0.75), ("p99", 0.99)]
 
 
 def _quantiles_window_form(li: DataFrame) -> DataFrame:
-    """The bounded-memory exact form (see block comment above)."""
-    li = li.filter(F.col("l_extendedprice").isNotNull())
+    """The bounded-memory exact form (see block comment above).
+
+    NULL values are counted out, not filtered out: like percentile(),
+    a group whose values are all NULL keeps its row, with NULL results.
+    The NULL value's count ``c`` is NULL, so it adds nothing to the
+    prefix sums or to ``n``, and its own NULL prefixes match no rank."""
     vc = li.groupBy("l_returnflag", "l_extendedprice").agg(
-        F.count(F.lit(1)).alias("c")
+        F.when(F.col("l_extendedprice").isNotNull(), F.count(F.lit(1)))
+        .alias("c")
     )
     wcum = (
         Window.partitionBy("l_returnflag").orderBy("l_extendedprice")
@@ -1498,6 +1503,11 @@ def q_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     if (_input_bytes(f"{sf_dir}/lineitem.parquet")
             > QUANTILES_EXACT_BUFFER_MAX_BYTES):
         return _quantiles_window_form(li)
+    return _quantiles_percentile_form(li)
+
+
+def _quantiles_percentile_form(li: DataFrame) -> DataFrame:
+    """The single-exchange exact form (see block comment above)."""
     # ONE percentile aggregate over an array of percentages per group —
     # four scalar percentile() instances would each buffer the group's
     # whole value multiset (the approx_quantiles_bound lesson; 4× the

@@ -152,7 +152,10 @@ def run_store(
     fixed 256-bucket default over-shuffled small loads 2.6× (round-5
     IMPORTER_E2E store stage) while the sidecar-recorded count keeps
     readers correct for any choice. Pass an explicit count to pin a
-    cross-load layout (incremental loads into one table must agree)."""
+    cross-load layout (incremental loads into one table must agree).
+    The writers per bucket directory follow the same estimate
+    (``SV.write_serving_table``: 1 for a load of at most 256 MiB, else
+    4), so a small load writes one file per directory."""
     from globallinks_spark.functions.predicates import domain_is_valid
     from pyspark.sql import functions as F
 

@@ -28,36 +28,51 @@ DEFAULT_BUCKETS = 256
 # from collapsing to one straggler directory.
 _TARGET_BUCKET_BYTES = 256 << 20
 _MIN_BUCKETS, _MAX_BUCKETS = 8, 4096
+_MAX_WRITERS_PER_BUCKET = 4
 _BUCKET_COL = "domain_bucket"
 _META_FILE = "_serving_meta.json"
 _MANIFEST_DIR = "_manifest"
 
 
-def auto_buckets(df: DataFrame) -> int:
-    """Size-aware bucket count from the plan's size estimate (for a
-    parquet scan: sum of file sizes — no job runs). Round 5's importer
-    e2e showed the fixed 256-bucket layout over-shuffling small loads:
-    1.28M rows fanned into 1024 write tasks / ~1024 parquet files, and
-    the store stage (11.6 s) cost 2.6× the compact stage. The layout
-    parameter belongs to the DATA size, not a constant: ~256 MiB per
-    bucket, power-of-two-rounded, clamped to [8, 4096]. Readers adapt
-    via the ``_serving_meta.json`` sidecar, so the write-time choice is
-    self-describing. Falls back to DEFAULT_BUCKETS when the estimate is
-    unavailable (non-file source with CBO off)."""
+def _plan_bytes(df: DataFrame) -> int | None:
+    """The optimizer's size estimate of ``df`` (for a parquet scan: sum
+    of file sizes — no job runs); None when it is unavailable (non-file
+    source with CBO off surfaces as a huge sentinel)."""
     try:
         size = int(
             df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
         )
     except Exception:
-        return DEFAULT_BUCKETS
-    if size <= 0 or size >= (1 << 62):  # unknown sizes surface as huge
-        return DEFAULT_BUCKETS
-    return _buckets_for_bytes(size)
+        return None
+    return size if 0 < size < (1 << 62) else None
+
+
+def auto_buckets(df: DataFrame) -> int:
+    """Size-aware bucket count from the plan's size estimate. Round 5's
+    importer e2e showed the fixed 256-bucket layout over-shuffling small
+    loads: 1.28M rows fanned into 1024 write tasks / ~1024 parquet
+    files, and the store stage (11.6 s) cost 2.6× the compact stage. The
+    layout parameter belongs to the DATA size, not a constant: ~256 MiB
+    per bucket, power-of-two-rounded, clamped to [8, 4096]. Readers
+    adapt via the ``_serving_meta.json`` sidecar, so the write-time
+    choice is self-describing. Falls back to DEFAULT_BUCKETS when the
+    estimate is unavailable."""
+    size = _plan_bytes(df)
+    return DEFAULT_BUCKETS if size is None else _buckets_for_bytes(size)
 
 
 def _buckets_for_bytes(size: int) -> int:
     n = max(1, size // _TARGET_BUCKET_BYTES)
     return int(min(_MAX_BUCKETS, max(_MIN_BUCKETS, 1 << (n - 1).bit_length())))
+
+
+def _writers_for_bytes(size: int | None) -> int:
+    """Writers per bucket directory: one when the whole load fits one
+    bucket's target size (it is split across buckets already, so a salt
+    only adds tasks and files), else 4; 4 when the size is unknown."""
+    if size is not None and size <= _TARGET_BUCKET_BYTES:
+        return 1
+    return _MAX_WRITERS_PER_BUCKET
 
 
 def domain_bucket(domain: F.Column, buckets: int = DEFAULT_BUCKETS) -> F.Column:
@@ -66,7 +81,7 @@ def domain_bucket(domain: F.Column, buckets: int = DEFAULT_BUCKETS) -> F.Column:
 
 def write_serving_table(
     df: DataFrame, path: str, buckets: int = DEFAULT_BUCKETS,
-    writers_per_bucket: int = 4,
+    writers_per_bucket: int | None = None,
 ) -> None:
     """Write compacted link rows partitioned by domain bucket. Rows are
     pre-shuffled on (bucket, salt) so each directory is written by up to
@@ -76,7 +91,17 @@ def write_serving_table(
     straggler, doubled when two bucket values hash-collide into one
     task. Salting by a row-content hash keeps the shuffle balanced while
     still bounding files-per-directory at writers_per_bucket (no
-    many-small-files explosion of partitionBy on unsorted input)."""
+    many-small-files explosion of partitionBy on unsorted input).
+
+    ``writers_per_bucket=None`` (the default) derives the count from the
+    same plan-size estimate ``auto_buckets`` reads: 1 when the whole
+    load is at most 256 MiB, else 4, and 4 when the estimate is unknown.
+    A small load thus writes one file per directory instead of four
+    (salted writers on a few thousand rows cost more in task and file
+    overhead than they save); any larger load keeps the salted layout.
+    An explicit count is used as given."""
+    if writers_per_bucket is None:
+        writers_per_bucket = _writers_for_bytes(_plan_bytes(df))
     salt = F.pmod(
         F.xxhash64("link_sub_domain", "link_path", "page_host"),
         F.lit(writers_per_bucket),

@@ -15,17 +15,13 @@ the columnar analogue of the reference's gjson path extraction
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import functools
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from globallinks_spark.functions.binding import bind_once
 from globallinks_spark.schemas import WAT_ENVELOPE_SCHEMA
-
-def _line_looks_like_record() -> "F.Column":
-    """Cheap pre-parse gate, mirroring the reference's line filter: a record
-    line starts with '{' and must mention href at all to carry links
-    (wat.go:321 `strings.HasPrefix(line, "{") && strings.Contains(line,
-    "href")`)."""
-    return F.col("value").startswith("{") & F.col("value").contains("href")
 
 
 def read_wat_pages(spark: SparkSession, paths: str | list[str]) -> DataFrame:
@@ -55,23 +51,34 @@ def wat_pages_from_lines(raw: DataFrame) -> DataFrame:
     never pay JSON parsing (the reference's early-filter ordering, SURVEY
     §4 X3 — Catalyst keeps both filters in one WholeStageCodegen stage).
     """
-    from globallinks_spark.functions.binding import bind_once
+    line_gate, envelope, page_cols, page_gate = _page_frame_columns()
+    env = raw.filter(line_gate).select(envelope).select("e.Envelope.*")
+    return env.select(*page_cols).filter(page_gate)
 
-    env = (
-        raw.filter(_line_looks_like_record())
-        # bind_once: without it, every downstream predicate that Catalyst
-        # pushes below the flatten carries its own from_json(value) copy —
-        # re-parsing the envelope per predicate per row (see
-        # functions/binding.py). The line-level gate above is the only
-        # filter that belongs below the parse, and it is already applied.
-        .select(bind_once(F.from_json("value", WAT_ENVELOPE_SCHEMA)).alias("e"))
-        .select("e.Envelope.*")
-    )
+
+@functools.cache
+def _page_frame_columns() -> tuple[Column, Column, tuple[Column, ...], Column]:
+    """(line gate, bound envelope parse, page columns, page gate) of
+    ``wat_pages_from_lines``, built once per process — they reference
+    only column names and the fixed envelope schema (see the note on
+    memoized Column trees in functions/urltools.py)."""
+    # Cheap pre-parse gate, mirroring the reference's line filter: a
+    # record line starts with '{' and must mention href at all to carry
+    # links (wat.go:321 `strings.HasPrefix(line, "{") &&
+    # strings.Contains(line, "href")`).
+    value = F.col("value")
+    line_gate = value.startswith("{") & value.contains("href")
+    # bind_once: without it, every downstream predicate that Catalyst
+    # pushes below the flatten carries its own from_json(value) copy —
+    # re-parsing the envelope per predicate per row (see
+    # functions/binding.py). The line-level gate is the only filter that
+    # belongs below the parse, and it is already applied.
+    envelope = bind_once(F.from_json("value", WAT_ENVELOPE_SCHEMA)).alias("e")
     meta = F.col("`WARC-Header-Metadata`")
     html = F.col(
         "`Payload-Metadata`.`HTTP-Response-Metadata`.`HTML-Metadata`"
     )
-    return env.select(
+    page_cols = (
         meta.getField("WARC-Target-URI").alias("target_uri"),
         meta.getField("WARC-Date").alias("warc_date"),
         meta.getField("WARC-IP-Address").alias("warc_ip"),
@@ -79,7 +86,9 @@ def wat_pages_from_lines(raw: DataFrame) -> DataFrame:
         html.getField("Head").getField("Metas").alias("metas"),
         html.getField("Head").getField("Link").alias("head_links"),
         html.getField("Links").alias("links"),
-    ).filter(F.col("target_uri").isNotNull() & F.col("links").isNotNull())
+    )
+    page_gate = F.col("target_uri").isNotNull() & F.col("links").isNotNull()
+    return line_gate, envelope, page_cols, page_gate
 
 
 def segment_of_path(path_col) -> "F.Column":

@@ -303,6 +303,30 @@ def test_fallback_extract_keeps_calibrated_field_and_flag():
     assert "value" not in in_bench or "fallback_in_bench" not in in_bench
 
 
+def test_fallback_extract_when_every_fresh_jvm_run_is_clipped(monkeypatch):
+    """The first launch fails and the section budget clips the other
+    four: the in-bench fallback stands in, and it still carries the
+    README-cited run list (empty) with the clip count."""
+    import bench
+
+    monkeypatch.setattr(bench, "_fresh_jvm_extract_once",
+                        lambda n, c, timeout_sec=900: None)
+    ticks = iter([0.0, 400.0])
+    in_bench = {"value": 200_000, "host": {}}
+    got = bench._fresh_jvm_extract(
+        n_pages=1000, cores=8, budget_sec=360.0,
+        _clock=lambda: next(ticks), fallback=in_bench,
+    )
+    assert got["fallback_in_bench"] is True
+    assert got["value"] == 200_000
+    assert got["runs_pages_per_min_per_core"] == []
+    assert got["runs_budget_clipped"] == bench.EXTRACT_RUNS - 1
+    # the plain fallback (nothing clipped) carries both fields too
+    got = bench._fallback_extract(in_bench)
+    assert got["runs_pages_per_min_per_core"] == []
+    assert got["runs_budget_clipped"] == 0
+
+
 def test_fresh_jvm_extract_returns_none_when_all_runs_fail(monkeypatch):
     import bench
 

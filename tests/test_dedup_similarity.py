@@ -425,12 +425,16 @@ class TestIVF:
         """build_ivf_index persists its input for the seed + Lloyd
         passes; a long-lived session composing many indexes must get
         that storage back deterministically, not at ContextCleaner GC's
-        leisure (round-2 verdict)."""
-        before = spark.sparkContext._jsc.getPersistentRDDs().size()
+        leisure (round-2 verdict). Compared by RDD id, not by count:
+        ContextCleaner may release frames that earlier tests persisted
+        while this one runs, which lowers the count without any leak."""
+        def persisted():
+            return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+        before = persisted()
         _, assigned = S.build_ivf_index(corpus, n_cells=8)
         assert assigned.count() == 200  # materialize the lazy assignment
-        after = spark.sparkContext._jsc.getPersistentRDDs().size()
-        assert after == before
+        assert persisted() <= before
 
 
 class TestXxhashKernel:

@@ -133,6 +133,58 @@ class TestPipeline:
         # the bucket predicate must reach the scan as partition pruning
         assert "domain_bucket" in plan
 
+    def test_serving_writers_sized_from_data(self, spark, pipeline_dirs,
+                                             tmp_path):
+        """A small store derives one writer per bucket directory, so it
+        writes exactly one parquet file per directory; an explicit
+        writers_per_bucket=4 still bounds files per directory at 4, and
+        both layouts read back the same rows, pruned or not."""
+        import glob
+
+        from globallinks_spark.functions.predicates import domain_is_valid
+        from globallinks_spark.sources import serving as SV
+        from pyspark.sql import functions as F
+
+        out, serving = pipeline_dirs
+
+        def files_per_dir(path):
+            dirs = glob.glob(os.path.join(path, "domain_bucket=*"))
+            assert dirs
+            return [len(glob.glob(os.path.join(d, "*.parquet")))
+                    for d in dirs]
+
+        assert set(files_per_dir(serving)) == {1}
+        df = spark.read.parquet(os.path.join(out, "compact")) \
+            .filter(domain_is_valid(F.col("link_domain"))).drop("segment")
+        salted = str(tmp_path / "salted")
+        SV.write_serving_table(df, salted, buckets=8, writers_per_bucket=4)
+        assert max(files_per_dir(salted)) <= 4
+
+        def rows(path, domain=None):
+            return sorted(map(tuple, SV.read_serving_table(
+                spark, path, domain=domain).collect()), key=str)
+
+        assert rows(serving) == rows(salted)
+        for d in ("target-one.org", "target-two.net"):
+            assert rows(serving, d) == rows(salted, d)
+        assert rows(serving, "target-one.org")
+        manifest = SV.read_manifest(spark, serving).collect()
+        assert [(r.segment, r.n_rows) for r in manifest] == [
+            ("s1", len(rows(serving)))
+        ]
+
+    def test_writers_per_bucket_rule(self):
+        """1 writer when the whole load is at most 256 MiB, else 4; 4
+        when the plan size is unknown."""
+        from globallinks_spark.sources import serving as SV
+
+        mib256 = SV._TARGET_BUCKET_BYTES
+        assert SV._writers_for_bytes(None) == 4
+        assert SV._writers_for_bytes(1) == 1
+        assert SV._writers_for_bytes(mib256) == 1
+        assert SV._writers_for_bytes(mib256 + 1) == 4
+        assert SV._writers_for_bytes(100 * 1024 * mib256) == 4
+
     def test_incremental_import_per_file_restart(self, spark, tmp_path):
         """File-granular restart (main.go:227-234): after a rerun with
         one NEW wat file, already-imported batches are not rewritten and
